@@ -387,8 +387,14 @@ def _banded(
 ) -> DataFrame:
     """Explode signatures into (id, band, band-hash) rows — band hash =
     xxhash64 over rows_per_band consecutive minhashes; bands that don't fit
-    (num_hashes % rows_per_band) are dropped, so r need not divide K."""
+    (num_hashes % rows_per_band) are dropped, so r need not divide K.
+    With fewer hashes than ``rows_per_band`` no band fits: the frame is
+    empty, with the same columns."""
     bands = num_hashes // rows_per_band
+    if bands == 0:
+        return sigs.select(
+            id_col, F.lit(0).alias("band"), F.lit(0).cast("long").alias("bh")
+        ).where(F.lit(False))
     entries = ", ".join(
         f"named_struct('band', {b}, 'bh', xxhash64("
         + ", ".join(
@@ -491,7 +497,13 @@ def _auto_rows_per_band(
     aggregate — 1 driver-synchronous job instead of 3 (count + two probes)
     on the escalation path, 1 instead of 2 on the common r=start path. The
     chosen r — smallest within budget, same fewer-than-2-bands stop — is
-    decision-identical to the sequential loop, so results are unchanged."""
+    decision-identical to the sequential loop, so results are unchanged.
+
+    With fewer hashes than ``start`` no band fits: ``start`` is returned
+    with its (empty) banded frame before probing, as the sequential loop
+    did, instead of deriving the corpus size from zero bands."""
+    if num_hashes < start:
+        return start, _banded(sigs, id_col, num_hashes, start)
     r = start
     while True:
         rs = [r]

@@ -21,6 +21,8 @@ same pipeline reads a Kafka/binlog source with lsn supplied by the log.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -120,8 +122,10 @@ class CdcStream:
         self.auto_compact_fences_every = auto_compact_fences_every
         # metrics table: per-partition lineage rows (source offsets, commit
         # snapshot-id, row counts) appended per batch — the queryable metrics
-        # feed beside the fenced merge. Idempotent under replay: a replayed
-        # epoch is fenced → applied=False → nothing re-appended.
+        # feed beside the fenced merge. Written on the driver with pyarrow,
+        # atomically (temp file + rename), with no Spark job. Idempotent
+        # under replay: a replayed epoch is fenced → applied=False → nothing
+        # re-appended.
         self.metrics_dir = metrics_dir
         # incrementally-maintained stats table (U2 overwrite analog). The
         # TWO tables fence the same epoch independently, which is what makes
@@ -221,29 +225,49 @@ class CdcStream:
                         stacklevel=2,
                     )
             if rows:
-                from datetime import datetime
-
-                from battetl_spark.schemas import LINEAGE_SCHEMA
-
-                spark = batch_df.sparkSession
-                rows = [
-                    {
-                        **r,
-                        "rebases": r.get("rebases", 0),
-                        "committed_at": datetime.fromisoformat(r["committed_at"]),
-                    }
-                    for r in rows
-                ]
-                spark.createDataFrame(
-                    [tuple(r[f.name] for f in LINEAGE_SCHEMA.fields) for r in rows],
-                    LINEAGE_SCHEMA,
-                ).coalesce(1).write.mode("append").parquet(self.metrics_dir)
+                self._append_metrics(rows)
         if self.on_batch is not None:
             self.on_batch(epoch_id, result)
 
+    def _append_metrics(self, rows: list[dict]) -> None:
+        """Append lineage rows to the metrics feed as one parquet file.
+
+        A batch has a few rows (one per source partition), so the file is
+        written on the driver with pyarrow: a Spark write would cost a job
+        (~1 s) per batch for no table data. The file is written under a
+        dot-prefixed name and renamed into place, so ``spark.read.parquet``
+        and ``_metrics_epoch_present`` (both skip dot-prefixed files) see
+        the whole file or nothing — a crash before the rename leaves the
+        epoch absent, and the heal path appends it on replay."""
+        import uuid
+        from datetime import datetime
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from battetl_spark.schemas import LINEAGE_SCHEMA
+
+        rows = [
+            {
+                **r,
+                "rebases": r.get("rebases", 0),
+                "committed_at": datetime.fromisoformat(r["committed_at"]),
+            }
+            for r in rows
+        ]
+        table = pa.Table.from_pydict(
+            {f.name: [r[f.name] for r in rows] for f in LINEAGE_SCHEMA.fields},
+            schema=to_arrow_schema(LINEAGE_SCHEMA),
+        )
+        os.makedirs(self.metrics_dir, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.metrics_dir, "." + name)
+        pq.write_table(table, tmp, compression="zstd")
+        os.replace(tmp, os.path.join(self.metrics_dir, name))
+
     def _metrics_epoch_present(self, spark, epoch_id: int) -> bool:
         import glob
-        import os
 
         if not glob.glob(os.path.join(self.metrics_dir, "**", "*.parquet"),
                          recursive=True):
@@ -264,7 +288,6 @@ class CdcStream:
         lineage collection was simply off when it ran, not vacuumed away."""
         import glob
         import json
-        import os
 
         meta = os.path.join(self.table.path, "metadata")
         epoch = int(epoch_id)

@@ -470,6 +470,20 @@ def test_minhash_auto_identical_below_budget(spark, docs):
     assert a.equals(b)
 
 
+def test_minhash_auto_fewer_hashes_than_start(spark, docs):
+    """ADVICE #1: with num_hashes < start no band fits. Auto banding must
+    return ``start`` and its empty banded frame instead of dividing the
+    banded row total by zero bands."""
+    sigs = TX.minhash_signatures(docs, num_hashes=1)
+    r, banded = TX._auto_rows_per_band(sigs, "doc_id", 1, start=2)
+    assert r == 2
+    assert banded.count() == 0
+    pairs = TX.minhash_lsh_pairs(
+        docs, num_hashes=1, jaccard_threshold=0.8, rows_per_band="auto"
+    )
+    assert pairs.count() == 0
+
+
 def test_incremental_equals_batch(spark, docs, tmp_path):
     """MinHashIndex batch-by-batch ingest must union to the full-corpus
     minhash_lsh_pairs answer: every unordered pair found exactly once, by
